@@ -1,7 +1,7 @@
 """Benchmark command for preprocessor_spark.
 
-    python3 perfbench/run.py --workload tabular_bulk --seed 1 --seconds 10 --trace 0
-    python3 perfbench/run.py --workload llm_dedup --seed 1 --seconds 10 --trace 1
+    python3 perfbench/run.py --workload tabular_bulk --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload llm_dedup --seed 1 --seconds 8 --trace 1
     python3 perfbench/run.py --selfcheck
 
 Run from the root of a checkout. One run generates (or reuses) the seeded
@@ -20,6 +20,7 @@ import time
 T_START = time.perf_counter()
 
 import argparse  # noqa: E402
+import itertools  # noqa: E402
 import json  # noqa: E402
 import os  # noqa: E402
 import statistics  # noqa: E402
@@ -86,7 +87,7 @@ def _parse_args(argv):
     p = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     p.add_argument("--workload")
     p.add_argument("--seed", type=int, default=1)
-    p.add_argument("--seconds", type=float, default=10)
+    p.add_argument("--seconds", type=float, default=8)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     p.add_argument("--selfcheck", action="store_true", help="every workload on tiny inputs, traced")
     args = p.parse_args(argv)
@@ -182,14 +183,14 @@ def run_workload(spark, name: str, seed: int, seconds: float, trace: int, small:
 
     for i in range(wl.warmup_ops):
         wl.op(i)
-    wl.check_once()
 
     ops, i, t0 = [], wl.warmup_ops, time.perf_counter()
-    while True:
+    # a traced run traces rounds 0, 3, 4, 7, ... and leaves 1, 2, 5, 6, ...
+    # untraced, so that warming up over the run does not bias the overhead
+    min_rounds = 4 if trace else 1
+    for rnd in itertools.count():
         for _ in range(wl.round_ops):
-            # a traced run traces every other round; the rest measure the overhead
-            rnd = (i - wl.warmup_ops) // wl.round_ops
-            tracer.enabled, tracer.op_id = bool(trace) and rnd % 2 == 0, i
+            tracer.enabled, tracer.op_id = bool(trace) and rnd % 4 in (0, 3), i
             res = wl.op(i)
             tracer.read_spark_counters()
             res["traced"], res["op"] = tracer.enabled, i
@@ -197,7 +198,7 @@ def run_workload(spark, name: str, seed: int, seconds: float, trace: int, small:
             tracer.enabled = False
             ops.append(res)
             i += 1
-        if time.perf_counter() - t0 >= seconds:
+        if rnd + 1 >= min_rounds and time.perf_counter() - t0 >= seconds:
             break
 
     work = [o for o in ops if not o.get("refit")]
@@ -230,13 +231,12 @@ def run_workload(spark, name: str, seed: int, seconds: float, trace: int, small:
         for layer, ms in sorted(self_ms.items(), key=lambda kv: -kv[1]):
             print(f"self_ms {layer} {ms:.1f}")
     else:
-        lat = plain
         rows = sum(o["rows"] for o in work)
         metrics = {
             "setup_s": {"value": setup_s, "unit": "s"},
             "peak_rss_mb": {"value": tree_peak_rss_mb(os.getpid()), "unit": "MB"},
-            "rows_per_s": {"value": rows / sum(lat), "unit": "1/s"},
-            "op_ms": {"value": _median(lat) * 1e3, "unit": "ms"},
+            "rows_per_s": {"value": rows / sum(plain), "unit": "1/s"},
+            "op_ms": {"value": _median(plain) * 1e3, "unit": "ms"},
         }
     record = _run_record(spark, name, seed, trace, host_before)
     record.update(

@@ -163,13 +163,17 @@ def arrow_eval_nodes(df, udf_name: str | None = None) -> int:
 
 
 def count_arrow_eval(text: str, udf_name: str | None = None) -> int:
-    """Count ArrowEvalPython node details in a formatted plan. An executed
-    adaptive plan prints its final and its initial plan; only nodes of the
-    final one are counted."""
+    """Count ArrowEvalPython nodes in a formatted plan. An executed adaptive
+    plan, also one nested in a cached relation, prints its final and then
+    its initial plan; nodes of an initial plan are not counted."""
     tree, _, details = text.partition("\n\n")
-    if "== Final Plan ==" in tree:
-        tree = tree.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
-    ids = set(re.findall(r"\((\d+)\)", tree))
+    ids, initial_col = set(), None
+    for line in tree.splitlines():
+        col = re.match(r"[ :|+-]*", line).end()
+        if initial_col is not None and col >= initial_col:
+            continue
+        initial_col = col if "== Initial Plan ==" in line else None
+        ids.update(re.findall(r"\((\d+)\)", line))
     n = 0
     for block in details.split("\n\n"):
         m = re.match(r"\((\d+)\) ArrowEvalPython", block.strip())
