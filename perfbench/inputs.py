@@ -29,11 +29,15 @@ SIZES = {
         "full": {"fit_rows": 20_000, "batches": 64, "batch_rows": 2_000},
         "small": {"fit_rows": 2_000, "batches": 4, "batch_rows": 200},
     },
-    "llm_dedup": {"full": {"docs": 1_200}, "small": {"docs": 400}},
+    "llm_dedup": {"full": {"docs": 800}, "small": {"docs": 400}},
     "vector_search": {
-        "full": {"vectors": 2_000, "dim": 64, "query_batches": 16, "queries": 16},
+        "full": {"vectors": 1_000, "dim": 64, "query_batches": 16, "queries": 16},
         "small": {"vectors": 1_000, "dim": 64, "query_batches": 2, "queries": 8},
     },
+}
+# llm_corpus runs the llm_dedup and vector_search ops on their own inputs
+SIZES["llm_corpus"] = {
+    size: {w: SIZES[w][size] for w in ("llm_dedup", "vector_search")} for size in ("full", "small")
 }
 
 CAT_THRESHOLD = 0.02  # Preprocessor default cat_labels_threshold
@@ -306,6 +310,8 @@ def _generate(workload: str, size: dict, seed: int, out: str) -> dict:
         qids = np.sort(rng.choice(len(vecs), nq, replace=False)).reshape(size["query_batches"], -1)
         top = exact_topk(vecs, qids.ravel(), SEARCH_K).reshape(qids.shape[0], qids.shape[1], -1)
         return {"query_batches": qids.tolist(), "exact_topk": top.tolist(), "k": SEARCH_K}
+    if workload == "llm_corpus":
+        return {w: _generate(w, size[w], seed, out) for w in ("llm_dedup", "vector_search")}
     raise ValueError(f"unknown workload {workload!r}")
 
 

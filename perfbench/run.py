@@ -1,7 +1,7 @@
 """Benchmark command for preprocessor_spark.
 
-    python3 perfbench/run.py --workload tabular_bulk --seed 1 --seconds 8 --trace 0
-    python3 perfbench/run.py --workload llm_dedup --seed 1 --seconds 8 --trace 1
+    python3 perfbench/run.py --workload tabular_bulk --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload llm_corpus --seed 1 --seconds 10 --trace 1
     python3 perfbench/run.py --selfcheck
 
 Run from the root of a checkout. One run generates (or reuses) the seeded
@@ -20,7 +20,6 @@ import time
 T_START = time.perf_counter()
 
 import argparse  # noqa: E402
-import itertools  # noqa: E402
 import json  # noqa: E402
 import os  # noqa: E402
 import statistics  # noqa: E402
@@ -35,6 +34,10 @@ NPROC = len(os.sched_getaffinity(0))
 SLOTS = max(1, min(2, NPROC))  # Spark task slots, never more than nproc
 DRIVER_MEM = "2g"
 LOAD_REPS = 3  # input loads per run; setup_s takes their median
+# C1 only: every op generates new classes (Spark codegen), so with the C2
+# tier the JVM keeps compiling and an op's CPU time halves over the first
+# eight ops; with C1 alone it settles after the first (README, "Steadiness")
+JIT = "-XX:TieredStopAtLevel=1"
 
 # (metric, layer span, counter, unit, better)
 PER_LAYER = [
@@ -87,7 +90,7 @@ def _parse_args(argv):
     p = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     p.add_argument("--workload")
     p.add_argument("--seed", type=int, default=1)
-    p.add_argument("--seconds", type=float, default=8)
+    p.add_argument("--seconds", type=float, default=10)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     p.add_argument("--selfcheck", action="store_true", help="every workload on tiny inputs, traced")
     args = p.parse_args(argv)
@@ -110,7 +113,7 @@ def _start_spark():
             "spark.driver.memory": DRIVER_MEM,
             "spark.ui.showConsoleProgress": "false",
             "spark.local.dir": local,
-            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={local}",
+            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={local} {JIT}",
             "spark.sql.warehouse.dir": os.path.join(DATA, "warehouse"),
         },
     )
@@ -181,41 +184,50 @@ def run_workload(spark, name: str, seed: int, seconds: float, trace: int, small:
     setup_s = session_s + _median(load_s)
     wl.prepare()
 
+    t_warm = time.perf_counter()
     for i in range(wl.warmup_ops):
         wl.op(i)
+    warmup_s = time.perf_counter() - t_warm
 
     ops, i, t0 = [], wl.warmup_ops, time.perf_counter()
-    # a traced run traces rounds 0, 3, 4, 7, ... and leaves 1, 2, 5, 6, ...
-    # untraced, so that warming up over the run does not bias the overhead
-    min_rounds = 4 if trace else 1
-    for rnd in itertools.count():
+    # whole rounds until ``seconds`` have passed (and, in a traced run, at
+    # least four work ops have run); a traced run traces work ops 0, 3, 4, 7,
+    # ... and leaves 1, 2, 5, 6, ... untraced, so that warming up over the
+    # run does not bias the overhead
+    n_work, min_work = 0, 4 if trace else 1
+    while True:
         for _ in range(wl.round_ops):
-            tracer.enabled, tracer.op_id = bool(trace) and rnd % 4 in (0, 3), i
+            refit = wl.is_refit(i)
+            tracer.enabled, tracer.op_id = bool(trace) and not refit and n_work % 4 in (0, 3), i
             res = wl.op(i)
             tracer.read_spark_counters()
             res["traced"], res["op"] = tracer.enabled, i
             res["latency"] = sum(res["phases"].values())
+            res["cpu_s"] = sum(res["cpu"].values())
             tracer.enabled = False
             ops.append(res)
+            n_work += not refit
             i += 1
-        if rnd + 1 >= min_rounds and time.perf_counter() - t0 >= seconds:
+        if time.perf_counter() - t0 >= seconds and n_work >= min_work:
             break
 
     work = [o for o in ops if not o.get("refit")]
     plain = [o["latency"] for o in work if not o["traced"]]
+    plain_cpu = [o["cpu_s"] for o in work if not o["traced"]]
     result = {
         "correct": True,
         "attempted": len(ops),
         "failed": sum(1 for o in ops if o.get("failed")),
     }
+    rss = tree_peak_rss_mb(os.getpid())
     if trace:
         traced_ops = {o["op"] for o in work if o["traced"]}
-        traced = [o["latency"] for o in work if o["traced"]]
+        traced_cpu = [o["cpu_s"] for o in work if o["traced"]]
         setup_values = {"session.get_spark": session_s * 1e3, "input.load": _median(load_s) * 1e3}
         metrics = {}
         for metric, layer, counter, unit, _ in PER_LAYER:
             if layer is None:
-                value = 100.0 * (_median(traced) / _median(plain) - 1.0) if plain and traced else 0.0
+                value = 100.0 * (_median(traced_cpu) / _median(plain_cpu) - 1.0) if plain_cpu and traced_cpu else 0.0
             elif layer in setup_values:
                 value = setup_values[layer]
             else:
@@ -231,12 +243,9 @@ def run_workload(spark, name: str, seed: int, seconds: float, trace: int, small:
         for layer, ms in sorted(self_ms.items(), key=lambda kv: -kv[1]):
             print(f"self_ms {layer} {ms:.1f}")
     else:
-        rows = sum(o["rows"] for o in work)
         metrics = {
             "setup_s": {"value": setup_s, "unit": "s"},
-            "peak_rss_mb": {"value": tree_peak_rss_mb(os.getpid()), "unit": "MB"},
-            "rows_per_s": {"value": rows / sum(plain), "unit": "1/s"},
-            "op_ms": {"value": _median(plain) * 1e3, "unit": "ms"},
+            "op_cpu_s": {"value": _median(plain_cpu), "unit": "s"},
         }
     record = _run_record(spark, name, seed, trace, host_before)
     record.update(
@@ -244,12 +253,16 @@ def run_workload(spark, name: str, seed: int, seconds: float, trace: int, small:
             "generate_s": gen_s,
             "session_s": session_s,
             "load_s": load_s,
+            "warmup_s": warmup_s,
             "ops": len(work),
             "op_latencies_s": [round(o["latency"], 4) for o in work],
-            "phase_medians_s": {
-                k: _median([o["phases"][k] for o in work if not o["traced"] and k in o["phases"]])
-                for k in sorted({k for o in work for k in o["phases"]})
-            },
+            "op_cpu_s": [round(o["cpu_s"], 3) for o in work],
+            "peak_rss_mb": sum(map(sum, rss.values())),
+            "peak_rss_mb_by_process": {k: [round(x) for x in v] for k, v in rss.items()},
+            "op_ms": _median(plain) * 1e3,
+            "rows_per_s": sum(o["rows"] for o in work if not o["traced"]) / sum(plain),
+            "phase_medians_s": _phase_medians(work, "phases"),
+            "phase_cpu_medians_s": _phase_medians(work, "cpu"),
         }
     )
     if len(plain) >= 100:  # at least ten samples beyond the 90th percentile
@@ -257,6 +270,12 @@ def run_workload(spark, name: str, seed: int, seconds: float, trace: int, small:
     print("record: " + json.dumps(record))
     result["metrics"] = metrics
     return result
+
+
+def _phase_medians(work: list, key: str) -> dict:
+    """Median over the untraced ops of each phase's wall or CPU time."""
+    names = sorted({k for o in work for k in o[key]})
+    return {k: _median([o[key][k] for o in work if not o["traced"] and k in o[key]]) for k in names}
 
 
 def _write_trace(name, seed, small, tracer, self_ms) -> None:

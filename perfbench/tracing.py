@@ -204,27 +204,63 @@ def _children() -> dict[int, list[int]]:
     return kids
 
 
-def tree_peak_rss_mb(root_pid: int) -> float:
-    """Sum of peak resident set size (VmHWM) over ``root_pid`` and every
-    descendant alive now: the driver Python, the JVM and its Python workers."""
+_TICK = os.sysconf("SC_CLK_TCK")
+
+
+def tree_cpu_s(root_pid: int) -> float:
+    """CPU seconds (user + system, own and of reaped children) used so far by
+    ``root_pid`` and every descendant alive now: the driver Python, the JVM
+    and its Python workers. Time the hypervisor steals from this VM is not
+    charged to any process, so this reading grows much less with host load
+    than wall time does."""
+    kids: dict[int, list[int]] = {}
+    ticks: dict[int, int] = {}
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{name}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+        kids.setdefault(int(fields[1]), []).append(int(name))
+        ticks[int(name)] = sum(int(x) for x in fields[11:15])
+    todo, total = [root_pid], 0
+    while todo:
+        pid = todo.pop()
+        todo.extend(kids.get(pid, []))
+        total += ticks.get(pid, 0)
+    return total / _TICK
+
+
+def tree_peak_rss_mb(root_pid: int) -> dict[str, list[float]]:
+    """Peak resident set size (VmHWM, MB) of ``root_pid`` and every
+    descendant alive now, by process name: the driver Python, the JVM and
+    its Python workers."""
     kids = _children()
-    todo, total_kb = [root_pid], 0
+    todo, out = [root_pid], {}
     while todo:
         pid = todo.pop()
         todo.extend(kids.get(pid, []))
         try:
             with open(f"/proc/{pid}/status") as f:
-                for line in f:
-                    if line.startswith("VmHWM:"):
-                        total_kb += int(line.split()[1])
+                fields = dict(line.split(":", 1) for line in f if ":" in line)
         except OSError:
             continue
-    return total_kb / 1024.0
+        if "VmHWM" in fields:
+            out.setdefault(fields["Name"].strip(), []).append(int(fields["VmHWM"].split()[0]) / 1024.0)
+    return out
 
 
 def host_state() -> dict:
-    """Load average and CPU pressure, so a drifting host shows in the record."""
+    """Load average, CPU pressure and the CPU time stolen from this VM
+    (``/proc/stat``, in clock ticks), so a drifting host shows in the record."""
     out = {}
+    try:
+        with open("/proc/stat") as f:
+            out["steal_ticks"] = int(f.readline().split()[8])
+    except (OSError, IndexError, ValueError):
+        out["steal_ticks"] = None
     for key, path in (("loadavg", "/proc/loadavg"), ("cpu_pressure", "/proc/pressure/cpu")):
         try:
             with open(path) as f:

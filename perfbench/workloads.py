@@ -18,7 +18,9 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 import inputs
-from tracing import arrow_eval_nodes, persisted_rdds, plan_nodes
+from tracing import arrow_eval_nodes, persisted_rdds, plan_nodes, tree_cpu_s
+
+_PID = os.getpid()
 
 
 class CheckFailed(Exception):
@@ -31,18 +33,26 @@ def _require(cond: bool, what: str) -> None:
 
 
 class _Timer:
-    """Adds the wall time of each ``with`` block to ``phases[name]``."""
+    """Adds the wall time of each ``with`` block to ``phases[name]`` and the
+    CPU time the process tree spent in it to ``cpu[name]``."""
 
     def __init__(self):
         self.phases: dict[str, float] = {}
+        self.cpu: dict[str, float] = {}
 
     @contextmanager
     def __call__(self, name: str):
+        c0 = tree_cpu_s(_PID)
         t0 = time.perf_counter()
         try:
             yield
         finally:
-            self.phases[name] = self.phases.get(name, 0.0) + time.perf_counter() - t0
+            t1 = time.perf_counter()
+            self.phases[name] = self.phases.get(name, 0.0) + t1 - t0
+            self.cpu[name] = self.cpu.get(name, 0.0) + tree_cpu_s(_PID) - c0
+
+    def result(self, **extra) -> dict:
+        return {"phases": self.phases, "cpu": self.cpu, **extra}
 
 
 class Workload:
@@ -77,6 +87,11 @@ class Workload:
     def prepare(self) -> None:
         """Untimed set-up of the checks: reads the generated inputs with
         pandas, and anything else that is the benchmark's own cost."""
+
+    def is_refit(self, i: int) -> bool:
+        """Whether op ``i`` is a zero-row refit, kept out of the latency
+        metrics and never traced."""
+        return False
 
     def op(self, i: int) -> dict:
         raise NotImplementedError
@@ -118,16 +133,16 @@ def _refit_empty(empty) -> dict:
             failed = False
         except Exception:  # today: TypeError from int(None) in the fit
             failed = True
-    return {"rows": 0, "phases": t.phases, "failed": failed, "refit": True}
+    return t.result(rows=0, failed=failed, refit=True)
 
 
 class TabularBulk(Workload):
     """Fit → transform → inverse_transform cycles over one large table,
     quantile scaling (approxQuantile fit, Arrow pandas-UDF scaler, datetime
-    sort). Each round is one cycle and one refit on a zero-row window."""
+    sort). Each round is three cycles and one refit on a zero-row window."""
 
     name = "tabular_bulk"
-    round_ops = 2
+    round_ops = 4
 
     def _load(self):
         self.table = self._read_cached("table.parquet")
@@ -143,8 +158,11 @@ class TabularBulk(Workload):
     def prepare(self):
         self.src = pd.read_parquet(os.path.join(self.dir, "table.parquet"))
 
+    def is_refit(self, i):
+        return i >= self.warmup_ops and (i - self.warmup_ops) % self.round_ops == self.round_ops - 1
+
     def op(self, i):
-        if i >= self.warmup_ops and i % 2 == 1:
+        if self.is_refit(i):
             return _refit_empty(self.table.limit(0))
         tr, t = self.tr, _Timer()
         with t("fit"), tr.span("preprocessor.fit"):
@@ -162,15 +180,15 @@ class TabularBulk(Workload):
                 back.write.format("noop").mode("overwrite").save()
         _check_fit(prep, self.ref)
         _require(n_out == self.rows, f"transform rows {n_out} != {self.rows}")
-        if i < self.warmup_ops:
+        if i == 0:
             self._check_output(out.toPandas())
         if tr.enabled:
             rebuilt = prep.transform(self.table)
             tr.note("preprocessor.transform", plan_nodes=plan_nodes(rebuilt),
                     arrow_eval_nodes=arrow_eval_nodes(rebuilt))
             tr.note("preprocessor.inverse_transform", plan_nodes=plan_nodes(back))
-        out.unpersist()
-        return {"rows": self.rows, "phases": t.phases}
+        out.unpersist(blocking=True)
+        return t.result(rows=self.rows)
 
     def _check_output(self, out: pd.DataFrame) -> None:
         """Full-output checks, made on the warm-up op, outside the window."""
@@ -226,8 +244,11 @@ class TabularBatches(Workload):
     def _batch(self, b: int):
         return self.pool.filter(F.col("batch") == b)
 
+    def is_refit(self, i):
+        return i % self.round_ops == self.round_ops - 1
+
     def op(self, i):
-        if i % self.round_ops == self.round_ops - 1:
+        if self.is_refit(i):
             return _refit_empty(self._batch(-1).drop("batch"))
         if self.prep is None:
             self._fit_once()
@@ -246,7 +267,7 @@ class TabularBatches(Workload):
         if tr.enabled:
             tr.note("preprocessor.transform", plan_nodes=plan_nodes(out))
             tr.note("preprocessor.inverse_transform", plan_nodes=plan_nodes(back))
-        return {"rows": len(got), "phases": t.phases}
+        return t.result(rows=len(got))
 
     def _check_restored(self, got: pd.DataFrame, b: int) -> None:
         want = self.src[self.src["batch"] == b]
@@ -381,7 +402,7 @@ class LlmDedup(Workload):
                 tr.note("operators.graph.dedup_keep_canonical", edges_in=n_pairs)
         tr.note("caching.persist_scope", persisted_rdds_after=persisted_rdds(self.sc) - before)
         self._check(n_filtered, n_exact, kept_ids, pair_rows, stats)
-        return {"rows": self.ref["docs"], "phases": t.phases}
+        return t.result(rows=self.ref["docs"])
 
     def _check(self, n_filtered, n_exact, kept_ids, pair_rows, stats):
         ref = self.ref
@@ -459,7 +480,7 @@ class VectorSearch(Workload):
                 )
         tr.note("caching.persist_scope", persisted_rdds_after=persisted_rdds(self.sc) - before)
         self._check(rows, qb)
-        return {"rows": len(self.batches[qb]), "phases": t.phases}
+        return t.result(rows=len(self.batches[qb]))
 
     def _check(self, rows, qb):
         got: dict[int, list[int]] = {}
@@ -472,4 +493,37 @@ class VectorSearch(Workload):
         _require(recall >= RECALL_FLOOR, f"IVF-PQ recall@{k} {recall:.3f} < {RECALL_FLOOR}")
 
 
-WORKLOADS = {w.name: w for w in (TabularBulk, TabularBatches, LlmDedup, VectorSearch)}
+# ---------------------------------------------------------------- corpus + vectors
+
+
+class LlmCorpus(Workload):
+    """The LLM-corpus operators in one op: the llm_dedup pipeline over the
+    corpus, then the vector_search chain for one query batch over the
+    embeddings. One op here has the work of one op of each of the two, so a
+    run of fixed length measures both at once instead of in two runs."""
+
+    name = "llm_corpus"
+
+    def __init__(self, spark, tracer, data_dir: str, ref: dict):
+        super().__init__(spark, tracer, data_dir, ref)
+        self.dedup = LlmDedup(spark, tracer, data_dir, ref["llm_dedup"])
+        self.search = VectorSearch(spark, tracer, data_dir, ref["vector_search"])
+
+    def load(self):
+        self.dedup.load()
+        self.search.load()
+
+    def prepare(self):
+        self.dedup.prepare()
+        self.search.prepare()
+
+    def op(self, i):
+        a, b = self.dedup.op(i), self.search.op(i)
+        return {
+            "rows": a["rows"],
+            "phases": {**a["phases"], **b["phases"]},
+            "cpu": {**a["cpu"], **b["cpu"]},
+        }
+
+
+WORKLOADS = {w.name: w for w in (TabularBulk, TabularBatches, LlmDedup, VectorSearch, LlmCorpus)}
